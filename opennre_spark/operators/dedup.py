@@ -1,13 +1,18 @@
 """Document deduplication for large-scale training-data pipelines:
 exact (hash groupBy), MinHash+LSH near-dup, SimHash near-dup, and
-token-n-gram Jaccard verification. All hot paths are pure Spark SQL
-expressions (JVM codegen) — no Python UDFs.
+token-n-gram Jaccard verification, and embedding-cosine clusters. The
+text paths are pure Spark SQL expressions (JVM codegen) — no Python
+UDFs; the embedding path runs similarity.ann_self_join's two numpy
+mapInArrow kernels.
 
 Scale shape (100 TB corpus):
   - exact: one shuffle on md5(text) — partial agg applies.
   - minhash/simhash: signatures are a narrow projection; the candidate
     join is an equi-join on (band, band_hash | band bits), linear in
     docs x bands; only blocked candidates pay the verification cost.
+  - embedding: signatures and exact cosine run in one bucketed Arrow
+    walk after one exchange on (band, band bits); see ann_self_join
+    for its memory and parallelism bounds.
   - clustering reuses the connected-components operator (linking.py).
 """
 
@@ -489,8 +494,9 @@ def embedding_dedup(
     **lsh_kwargs,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate clustering: hyperplane-LSH
-    blocked candidate pairs verified with exact cosine
-    (similarity.ann_self_join), clustered by connected components.
+    bucketed pairs verified with exact cosine (similarity.ann_self_join,
+    a bucketed numpy mapInArrow walk), clustered by connected
+    components.
     Returns (vec_id, cluster_id) where cluster_id = min member id;
     singletons map to themselves — same contract as minhash_dedup, the
     embedding-space rendition of near-dup detection for training

@@ -22,7 +22,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Affine MinHash family over a 31-bit domain: keeping the base hash and
@@ -177,27 +177,28 @@ def connected_components(
 
     Each round is two self-join+agg passes; lineage is truncated with
     localCheckpoint() so the plan doesn't grow exponentially
-    (SURVEY.md §4 'needs custom work' #1).
+    (SURVEY.md §4 'needs custom work' #1). Raises RuntimeError when the
+    edge set has not reached its fixed point after `max_iter` rounds —
+    the unconverged edges would map nodes to wrong components.
     """
-    e = (
+    def checkpoint_with_sig(df: DataFrame):
+        """localCheckpoint df and, in the same job, its order-insensitive
+        set signature (count, sum of per-edge 64-bit hashes, summed in
+        decimal so ANSI mode can't overflow) via an Observation — no
+        separate action; the convergence screen stays O(|E|) map-side."""
+        obs = Observation()
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+        ).localCheckpoint()
+        return df, (obs.get["n"], obs.get["h"])
+
+    e, sig = checkpoint_with_sig(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-
-    def edge_sig(df: DataFrame) -> tuple:
-        """Order-insensitive set signature (count, sum of per-edge
-        64-bit hashes, summed in decimal so ANSI mode can't overflow):
-        ONE action per round instead of two exceptAll passes — the
-        convergence check itself stays O(|E|) map-side work."""
-        r = df.agg(
-            F.count(F.lit(1)),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-        ).first()
-        return (r[0], r[1])
-
-    sig = edge_sig(e)
     for _ in range(max_iter):
         # symmetrize: star operations need the full undirected adjacency.
         # Checkpointed: each round's plan references nbrs four times
@@ -227,15 +228,16 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
             .unionByName(smins.select(F.col("u"), F.col("mn").alias("v")))
         )
-        new_e = large.unionByName(small).filter(F.col("u") != F.col("v")).distinct()
-        new_e = new_e.localCheckpoint()
-        # converged when the edge set reached a fixed point. The cheap
-        # signature (one action/round, previous round's carried forward)
-        # SCREENS for candidate convergence; an exact exceptAll equality
-        # check then CONFIRMS it — the expensive two-action comparison
-        # runs only at the (single) candidate round, and a 64-bit
-        # hash-sum collision can never silently truncate the iteration.
-        new_sig = edge_sig(new_e)
+        new_e, new_sig = checkpoint_with_sig(
+            large.unionByName(small).filter(F.col("u") != F.col("v")).distinct()
+        )
+        # converged when the edge set reached a fixed point. The
+        # signature (observed by the checkpoint job, previous round's
+        # carried forward) SCREENS for candidate convergence; an exact
+        # exceptAll equality check then CONFIRMS it — the expensive
+        # two-action comparison runs only at the (single) candidate
+        # round, and a 64-bit hash-sum collision can never silently
+        # truncate the iteration.
         if new_sig == sig and new_e.exceptAll(e).isEmpty() and e.exceptAll(
             new_e
         ).isEmpty():
@@ -243,6 +245,11 @@ def connected_components(
             break
         sig = new_sig
         e = new_e
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} "
+            "rounds"
+        )
 
     comp = e.groupBy("u").agg(F.min("v").alias("mn"))
     comp = comp.select(

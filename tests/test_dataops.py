@@ -115,6 +115,89 @@ def test_ann_self_join_finds_planted_neighbors(spark):
     assert (0, 100) in got and (7, 107) in got
 
 
+def _ann_rows(seed, n=60, dim=16):
+    """Random vectors plus exact and noisy copies, so buckets hold
+    pairs on both sides of a 0.3-0.6 threshold."""
+    rng = np.random.default_rng(seed)
+    base = rng.normal(size=(n, dim))
+    rows = [(int(i), base[i]) for i in range(n)]
+    for j in range(n // 2):
+        src = int(rng.integers(n))
+        noise = 0.0 if j % 5 == 0 else float(rng.uniform(0.1, 1.0))
+        rows.append((1000 + j, base[src] + rng.normal(scale=noise, size=dim)))
+    rng.shuffle(rows)
+    return [(i, [float(x) for x in v]) for i, v in rows]
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+@pytest.mark.parametrize("num_bands", [16, 8, 4])
+def test_ann_self_join_equals_sql_reference(spark, monkeypatch, num_bands, elem):
+    """The bucketed kernel returns exactly the SQL formulation's rows —
+    cos_sim equal as doubles — for 1-, 2- and 4-bit bands, with 4-row
+    Arrow batches (buckets span batch boundaries) and a 7-row Gram tile
+    (buckets span several tiles)."""
+    from tests.oracle.ann_sql import ann_self_join_sql
+
+    df = spark.createDataFrame(
+        _ann_rows(num_bands), f"vec_id long, embedding array<{elem}>"
+    )
+    monkeypatch.setattr(similarity, "_GRAM_TILE", 7)
+    kw = dict(dim=16, cosine_threshold=0.3, num_planes=16, num_bands=num_bands)
+    want = sorted(ann_self_join_sql(df, **kw).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        got = sorted(similarity.ann_self_join(df, **kw).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert len(want) > 50
+    assert got == want
+
+
+def test_ann_self_join_rejects_wrong_length_and_zero_vectors(spark):
+    """dim is enforced: a zip_with fold would null-pad a short vector,
+    which then silently loses its pairs."""
+    rows = _ann_rows(1, n=10)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="num_bands"):
+        similarity.ann_self_join(df, dim=16, num_planes=16, num_bands=17)
+    for bad_id, bad in ((5, [1.0] * 15), (6, [0.0] * 16)):
+        df = spark.createDataFrame(
+            rows + [(bad_id, bad)], "vec_id long, embedding array<double>"
+        )
+        with pytest.raises(Exception, match=f"ValueError.*vec_id {bad_id} "):
+            similarity.ann_self_join(df, dim=16, cosine_threshold=0.3).collect()
+
+
+def test_ann_self_join_null_vectors_never_pair(spark):
+    rows = _ann_rows(2, n=20)
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(
+        rows + [(7000, None), (7001, [None] + rows[0][1][1:])], schema
+    )
+    kw = dict(dim=16, cosine_threshold=0.3)
+    want = sorted(similarity.ann_self_join(clean, **kw).collect())
+    assert want
+    assert sorted(similarity.ann_self_join(dirty, **kw).collect()) == want
+
+
+def test_ann_self_join_is_one_exchange_and_two_jobs(spark):
+    df = spark.createDataFrame(_ann_rows(3), "vec_id long, embedding array<double>")
+    q = similarity.ann_self_join(df, dim=16, cosine_threshold=0.5, num_bands=8)
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 2
+    assert plan.count("Exchange") == 1 and "hashpartitioning" in plan
+    assert "Join" not in plan and "Broadcast" not in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("ann_jobs", "ann_self_join job count")
+    try:
+        q.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ann_jobs")) <= 2
+
 def test_document_stats(spark, docs):
     out = {r.doc_id: r for r in textstats.document_stats(docs).collect()}
     texts = {r.doc_id: r.text for r in docs.collect()}

@@ -37,6 +37,16 @@ def test_connected_components_long_chain(spark):
     assert len(comp) == n + 1
 
 
+
+def test_connected_components_raises_when_unconverged(spark):
+    """A path needs several star rounds; returning after max_iter=1
+    would hand back components that are still split."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
+
 def _uf_oracle(edges):
     """Union-find reference: node -> min member id of its component,
     over nodes incident to at least one non-self-loop edge (the
